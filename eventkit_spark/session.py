@@ -43,6 +43,19 @@ def _advisory_partition_bytes(cpus: int) -> str:
     return "64m"
 
 
+def _size_to_bytes(v: str) -> int:
+    """Parse a Spark size string ("2097152", "64m", "64mb", "1.5g") to
+    bytes."""
+    s = str(v).strip().lower()
+    if s.endswith("b"):
+        s = s[:-1]
+    for suffix, mult in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
+                         ("t", 1 << 40), ("p", 1 << 50)):
+        if s.endswith(suffix):
+            return int(float(s[:-1]) * mult)
+    return int(float(s))
+
+
 def session_width(spark: SparkSession) -> int:
     """Parallelism width for explicit repartition/slice decisions:
     ``spark.sql.shuffle.partitions`` when numeric, else the scheduler's

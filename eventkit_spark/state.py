@@ -16,6 +16,8 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
+from ._worker import _round6, _worker_prologue
+
 
 def ema_exact(ef, n: int | None = None, weight: float | None = None):
     """Linear-scan EMA recurrence per key — use when per-key streams are
@@ -35,6 +37,7 @@ def ema_exact(ef, n: int | None = None, weight: float | None = None):
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
+        _worker_prologue()
         pdf = pdf.sort_values(seq_col)
         x = pdf[value_col].to_numpy(dtype="float64")
         out = np.full_like(x, np.nan)
@@ -166,6 +169,7 @@ def throttle(ef, maximum: float, interval: float, cost: float = 1.0, cost_expr=N
         # batches — state carries over via (cur_key, cur_state).
         import numpy as np
 
+        _worker_prologue()
         cur_key = object()  # sentinel unequal to any real key
         cur_state = _KeyState()
         for pdf in batches:
@@ -223,17 +227,6 @@ def throttle(ef, maximum: float, interval: float, cost: float = 1.0, cost_expr=N
     return ef._with(df=df.select(*out_cols))
 
 
-def _round6(arr):
-    """Round to 6 decimals with HALF-AWAY-FROM-ZERO ties on the scaled
-    double — the semantics DuckDB's round(DOUBLE, n) and Spark's
-    F.round share. np.round is half-EVEN: a recurrence landing exactly
-    on a 5e-7 boundary (holt hit one at sf0.01) flips the last digit
-    between engines."""
-    import numpy as np
-
-    return np.copysign(np.floor(np.abs(arr) * 1e6 + 0.5), arr) / 1e6
-
-
 def cusum(ef, target: float, h: float, slack: float = 0.0, reset: bool = True):
     """Two-sided CUSUM control chart (Page 1954) per key: the classic
     sequential change-point detector.
@@ -266,12 +259,8 @@ def cusum(ef, target: float, h: float, slack: float = 0.0, reset: bool = True):
     kh = float(h)
 
     def kernel(batches):
+        _worker_prologue()
         state = {}  # key tuple -> (hi, lo); carries across batch splits
-        # local copy of _round6: the closure must stay self-contained —
-        # executors can't import eventkit_spark when the driver runs
-        # outside the repo (path-based package, not installed)
-        r6 = lambda arr: np.copysign(np.floor(np.abs(arr) * 1e6 + 0.5), arr) / 1e6
-
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -291,8 +280,8 @@ def cusum(ef, target: float, h: float, slack: float = 0.0, reset: bool = True):
                 hi[i], lo[i], al[i] = nh, nl, a
                 state[keys[i]] = (0.0, 0.0) if (a and reset) else (nh, nl)
             out = pdf.copy()
-            out["cusum_hi"] = r6(hi)
-            out["cusum_lo"] = r6(lo)
+            out["cusum_hi"] = _round6(hi)
+            out["cusum_lo"] = _round6(lo)
             out["alarm"] = al
             yield out
 
@@ -341,9 +330,8 @@ def holt(ef, alpha: float = 0.5, beta: float = 0.3):
     one_b = 1.0 - b
 
     def kernel(batches):
+        _worker_prologue()
         state = {}  # key tuple -> (level, trend)
-        r6 = lambda arr: np.copysign(np.floor(np.abs(arr) * 1e6 + 0.5), arr) / 1e6
-
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -365,9 +353,9 @@ def holt(ef, alpha: float = 0.5, beta: float = 0.3):
                 lv[i], tr[i] = nl, nt
                 state[keys[i]] = (nl, nt)
             out = pdf.copy()
-            out["level"] = r6(lv)
-            out["trend"] = r6(tr)
-            out["forecast"] = r6(lv + tr)
+            out["level"] = _round6(lv)
+            out["trend"] = _round6(tr)
+            out["forecast"] = _round6(lv + tr)
             yield out
 
     out_schema = ", ".join(
@@ -410,9 +398,8 @@ def kalman1d(ef, q: float = 0.01, r: float = 1.0, p0: float = 1.0):
     kq, kr, kp0 = float(q), float(r), float(p0)
 
     def kernel(batches):
+        _worker_prologue()
         state = {}  # key tuple -> (x, p)
-        r6 = lambda arr: np.copysign(np.floor(np.abs(arr) * 1e6 + 0.5), arr) / 1e6
-
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -437,9 +424,9 @@ def kalman1d(ef, q: float = 0.01, r: float = 1.0, p0: float = 1.0):
                 xs[i], ps[i], ks[i] = nx, np_, nk
                 state[keys[i]] = (nx, np_)
             out = pdf.copy()
-            out["kf_x"] = r6(xs)
-            out["kf_p"] = r6(ps)
-            out["kf_gain"] = r6(ks)
+            out["kf_x"] = _round6(xs)
+            out["kf_p"] = _round6(ps)
+            out["kf_gain"] = _round6(ks)
             yield out
 
     out_schema = ", ".join(

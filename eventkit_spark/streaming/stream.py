@@ -85,7 +85,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
-from ..session import session_width
+from .._worker import _round6, _worker_prologue
+from ..session import _size_to_bytes, session_width
 
 
 def tws_available(spark: SparkSession | None = None) -> bool:
@@ -124,19 +125,6 @@ def tws_available(spark: SparkSession | None = None) -> bool:
         return "RocksDB" in (provider or "")
     except Exception:  # noqa: BLE001 — any import/runtime gap: not available
         return False
-
-
-def _size_to_bytes(v: str) -> int:
-    """Parse a Spark size conf value ("2097152", "64m", "1g") to bytes."""
-    s = str(v).strip().lower()
-    for suffix, mult in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if s.endswith(suffix + "b"):
-            s = s[:-1]
-        if s.endswith(suffix):
-            return int(float(s[:-1]) * mult)
-    if s.endswith("b"):
-        s = s[:-1]
-    return int(s)
 
 
 def _dir_bytes(path: str) -> int:
@@ -450,6 +438,30 @@ class StreamFrame:
             src_bytes=self.src_bytes,
         )
 
+    def _stateful(self, frame: DataFrame, handler, out_schema: str,
+                  state_schema: str,
+                  timeout: str = GroupStateTimeout.NoTimeout) -> DataFrame:
+        """The one ``applyInPandasWithState`` entry point: group
+        ``frame`` by the stream's key columns (one constant group when
+        unkeyed) and run ``handler(key, pdfs, state)`` per key group in
+        append mode. The handler is wrapped so that the by-value worker
+        prologue (``_worker._make_worker_prologue``: no zip-archive
+        re-reads on every Python task) runs before it, once per task."""
+        keys = self.key_cols
+
+        def run(key, pdfs, state):
+            _worker_prologue()
+            return handler(key, pdfs, state)
+
+        grouped = frame.groupBy(*keys) if keys else frame.groupBy(F.lit(0).alias("__g"))
+        return grouped.applyInPandasWithState(
+            run,
+            outputStructType=out_schema,
+            stateStructType=state_schema,
+            outputMode="append",
+            timeoutConf=timeout,
+        )
+
     # -- stateless ----------------------------------------------------
     def with_watermark(self, delay: str = "10 seconds") -> "StreamFrame":
         return self._with(df=self.df.withWatermark(self.ts_col, delay))
@@ -685,16 +697,7 @@ class StreamFrame:
             if outs:
                 yield pd.DataFrame(outs)
 
-        grouped = (
-            tagged.groupBy(*keys) if keys else tagged.groupBy(F.lit(0).alias("__g"))
-        )
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return self._stateful(tagged, handler, out_schema, state_schema)
 
     # -- stateful running aggregates (emit one row per input row) -----
     def running_agg(
@@ -774,14 +777,7 @@ class StreamFrame:
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-        grouped = self.df.groupBy(*keys) if keys else self.df.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return self._stateful(self.df, handler, out_schema, state_schema)
 
     def _running_agg_tws(self, ema_n: int) -> DataFrame:
         """``transformWithStateInPandas`` form of ``running_agg`` — the
@@ -850,14 +846,7 @@ class StreamFrame:
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-        grouped = self.df.groupBy(*keys) if keys else self.df.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType=f"prev {vt}",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return self._stateful(self.df, handler, out_schema, f"prev {vt}")
 
     def take(self, count: int = 1) -> DataFrame:
         """Streaming Take (select.py:32-46): the first ``count`` rows
@@ -904,14 +893,7 @@ class StreamFrame:
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-        grouped = self.df.groupBy(*keys) if keys else self.df.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType="seen long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return self._stateful(self.df, handler, out_schema, "seen long")
 
     def take_budget(self, budget: float, cost_col: str | None = None) -> DataFrame:
         """Streaming COST-capped take — the ingest-time twin of the
@@ -959,14 +941,7 @@ class StreamFrame:
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-        grouped = self.df.groupBy(*keys) if keys else self.df.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType="spent double",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return self._stateful(self.df, handler, out_schema, "spent double")
 
     def enumerate(self, start: int = 0, step: int = 1) -> DataFrame:
         """Streaming Enumerate (transform.py:38-50): prepend a running
@@ -1014,14 +989,7 @@ class StreamFrame:
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-        grouped = self.df.groupBy(*keys) if keys else self.df.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType="seen long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return self._stateful(self.df, handler, out_schema, "seen long")
 
     def last(self) -> DataFrame:
         """Streaming Last: the per-key latest payload as a native
@@ -1084,14 +1052,7 @@ class StreamFrame:
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-        grouped = self.df.groupBy(*keys) if keys else self.df.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType=f"buf array<{vt}>",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return self._stateful(self.df, handler, out_schema, f"buf array<{vt}>")
 
     def chunk(self, size: int, flush_after: float | None = None) -> DataFrame:
         """Streaming Chunk (operators/transform.py:chunk; eventkit
@@ -1187,21 +1148,11 @@ class StreamFrame:
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-        grouped = self.df.groupBy(*keys) if keys else self.df.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType=(
-                f"buf array<{vt}>, last long"
-                if flush_after is not None
-                else f"buf array<{vt}>"
-            ),
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.EventTimeTimeout
-                if flush_after is not None
-                else GroupStateTimeout.NoTimeout
-            ),
+        if flush_after is None:
+            return self._stateful(self.df, handler, out_schema, f"buf array<{vt}>")
+        return self._stateful(
+            self.df, handler, out_schema, f"buf array<{vt}>, last long",
+            GroupStateTimeout.EventTimeTimeout,
         )
 
     def product(self, start: float = 1.0) -> DataFrame:
@@ -1240,14 +1191,7 @@ class StreamFrame:
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-        grouped = self.df.groupBy(*keys) if keys else self.df.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType="acc double",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return self._stateful(self.df, handler, out_schema, "acc double")
 
     def takewhile(self, predicate) -> DataFrame:
         """Streaming TakeWhile (select.py:49-61): pass rows until the
@@ -1309,16 +1253,7 @@ class StreamFrame:
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-        grouped = (
-            tagged.groupBy(*keys) if keys else tagged.groupBy(F.lit(0).alias("__g"))
-        )
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType="flipped boolean",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return self._stateful(tagged, handler, out_schema, "flipped boolean")
 
     def takeuntil(self, notifier: "StreamFrame") -> DataFrame:
         """Streaming TakeUntil (select.py:79-99): pass source rows
@@ -1380,14 +1315,7 @@ class StreamFrame:
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-        grouped = both.groupBy(*keys) if keys else both.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType="cut long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return self._stateful(both, handler, out_schema, "cut long")
 
     def pairwise(self) -> DataFrame:
         """Streaming Pairwise (aggregate.py:114-127): (prev, cur) per
@@ -1429,14 +1357,7 @@ class StreamFrame:
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-        grouped = self.df.groupBy(*keys) if keys else self.df.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType=f"prev {vt}",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return self._stateful(self.df, handler, out_schema, f"prev {vt}")
 
     def ziplatest(self, other: "StreamFrame") -> DataFrame:
         """Streaming Ziplatest (combine.py:264-302): union both streams,
@@ -1493,14 +1414,7 @@ class StreamFrame:
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-        grouped = tagged.groupBy(*keys) if keys else tagged.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType=f"v0 {vt}, v1 {vt}",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return self._stateful(tagged, handler, out_schema, f"v0 {vt}, v1 {vt}")
 
     def zip(self, other: "StreamFrame") -> DataFrame:
         """Streaming Zip (combine.py:219-261): pair the i-th value of
@@ -1566,13 +1480,8 @@ class StreamFrame:
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-        grouped = tagged.groupBy(*keys) if keys else tagged.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType=f"q0 array<{vt}>, q1 array<{vt}>, emitted long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        return self._stateful(
+            tagged, handler, out_schema, f"q0 array<{vt}>, q1 array<{vt}>, emitted long"
         )
 
     def sample(self, timer: "StreamFrame") -> DataFrame:
@@ -1633,14 +1542,7 @@ class StreamFrame:
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-        grouped = tagged.groupBy(*keys) if keys else tagged.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType=f"latest {vt}",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return self._stateful(tagged, handler, out_schema, f"latest {vt}")
 
     def interval_join(
         self,
@@ -1768,14 +1670,7 @@ class StreamFrame:
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-        grouped = tagged.groupBy(*keys) if keys else tagged.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType=f"r_ts {tst}, r_v {rvt}",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return self._stateful(tagged, handler, out_schema, f"r_ts {tst}, r_v {rvt}")
 
     def throttle(self, maximum: float, interval: float, cost: float = 1.0) -> DataFrame:
         """Streaming Throttle: the same sliding-budget re-timestamping
@@ -1823,13 +1718,8 @@ class StreamFrame:
             if outs:
                 yield pd.DataFrame(outs)
 
-        grouped = self.df.groupBy(*keys) if keys else self.df.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType="wt array<double>, wc array<double>, last_emit double",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        return self._stateful(
+            self.df, handler, out_schema, "wt array<double>, wc array<double>, last_emit double"
         )
 
     # -- higher-order (emap family) ------------------------------------
@@ -1903,14 +1793,7 @@ class StreamFrame:
             if outs:
                 yield pd.DataFrame(outs)
 
-        grouped = rows.groupBy(*keys) if keys else rows.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType="n long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return self._stateful(rows, handler, out_schema, "n long")
 
     def concatmap(self, child_gen) -> DataFrame:
         """Streaming emap+Concat — see ``_emap_cut``."""
@@ -2026,14 +1909,7 @@ class StreamFrame:
             if outs:
                 yield pd.DataFrame(outs)
 
-        grouped = rows.groupBy(*keys) if keys else rows.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return self._stateful(rows, handler, out_schema, state_schema)
 
     # -- windowed -----------------------------------------------------
     def count_min(self, col: str, d: int = 4, w: int = 1024) -> DataFrame:
@@ -2202,14 +2078,7 @@ class StreamFrame:
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-        grouped = self.df.groupBy(*keys) if keys else self.df.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType="prev long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return self._stateful(self.df, handler, out_schema, "prev long")
 
     def timeout(self, seconds: float, emit_sentinel: bool = False) -> DataFrame:
         """Streaming Timeout (operators/timing.py:timeout; eventkit
@@ -2289,17 +2158,10 @@ class StreamFrame:
             if outs:
                 yield pd.DataFrame(outs)
 
-        grouped = self.df.groupBy(*keys) if keys else self.df.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType="flipped boolean, prev long",
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.EventTimeTimeout
-                if emit_sentinel
-                else GroupStateTimeout.NoTimeout
-            ),
+        return self._stateful(
+            self.df, handler, out_schema, "flipped boolean, prev long",
+            GroupStateTimeout.EventTimeTimeout if emit_sentinel
+            else GroupStateTimeout.NoTimeout,
         )
 
     def iterate(self, values) -> DataFrame:
@@ -2339,14 +2201,7 @@ class StreamFrame:
             if outs:
                 yield pd.DataFrame(outs)
 
-        grouped = self.df.groupBy(*keys) if keys else self.df.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType="seen long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return self._stateful(self.df, handler, out_schema, "seen long")
 
     def cusum(self, target: float, h: float, slack: float = 0.0,
               reset: bool = True) -> DataFrame:
@@ -2376,22 +2231,15 @@ class StreamFrame:
                     a = nh > kh or nl > kh
                     outs.append({
                         **{k: row[k] for k in keys}, ts_col: row[ts_col],
-                        "value": x, "cusum_hi": round(nh, 6),
-                        "cusum_lo": round(nl, 6), "alarm": a,
+                        "value": x, "cusum_hi": _round6(nh),
+                        "cusum_lo": _round6(nl), "alarm": a,
                     })
                     hi, lo = (0.0, 0.0) if (a and reset) else (nh, nl)
             state.update((hi, lo))
             if outs:
                 yield pd.DataFrame(outs)
 
-        grouped = self.df.groupBy(*keys) if keys else self.df.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType="hi double, lo double",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return self._stateful(self.df, handler, out_schema, "hi double, lo double")
 
     def holt(self, alpha: float = 0.5, beta: float = 0.3) -> DataFrame:
         """Streaming Holt smoothing twin (state.py:holt): the coupled
@@ -2412,13 +2260,6 @@ class StreamFrame:
 
         def handler(key, pdfs, state: GroupState):
             lvl, tr = state.get if state.exists else (None, None)
-            # self-contained rounder (executors can't import the repo
-            # package when the driver runs outside it)
-            import math
-
-            def _r6(x):
-                return math.copysign(math.floor(abs(x) * 1e6 + 0.5), x) / 1e6
-
             outs = []
             for pdf in _sorted_chunks(pdfs, ts_col):
                 for _, row in pdf.iterrows():
@@ -2430,9 +2271,9 @@ class StreamFrame:
                         nt = b * (nl - lvl) + one_b * tr
                     outs.append({
                         **{k: row[k] for k in keys}, ts_col: row[ts_col],
-                        "value": x, "level": _r6(nl),
-                        "trend": _r6(nt),
-                        "forecast": _r6(nl + nt),
+                        "value": x, "level": _round6(nl),
+                        "trend": _round6(nt),
+                        "forecast": _round6(nl + nt),
                     })
                     lvl, tr = nl, nt
             if lvl is not None:
@@ -2440,14 +2281,7 @@ class StreamFrame:
             if outs:
                 yield pd.DataFrame(outs)
 
-        grouped = self.df.groupBy(*keys) if keys else self.df.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType="l double, t double",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return self._stateful(self.df, handler, out_schema, "l double, t double")
 
     def kalman1d(self, q: float = 0.01, r: float = 1.0, p0: float = 1.0) -> DataFrame:
         """Streaming 1-D Kalman twin (state.py:kalman1d): (x, p) carried
@@ -2465,11 +2299,6 @@ class StreamFrame:
 
         def handler(key, pdfs, state: GroupState):
             x, p = state.get if state.exists else (None, None)
-            import math
-
-            def _r6(v):
-                return math.copysign(math.floor(abs(v) * 1e6 + 0.5), v) / 1e6
-
             outs = []
             for pdf in _sorted_chunks(pdfs, ts_col):
                 for _, row in pdf.iterrows():
@@ -2483,22 +2312,15 @@ class StreamFrame:
                         p = (1.0 - k) * pm
                     outs.append({
                         **{kk: row[kk] for kk in keys}, ts_col: row[ts_col],
-                        "value": z, "kf_x": _r6(x), "kf_p": _r6(p),
-                        "kf_gain": _r6(k),
+                        "value": z, "kf_x": _round6(x), "kf_p": _round6(p),
+                        "kf_gain": _round6(k),
                     })
             if x is not None:
                 state.update((x, p))
             if outs:
                 yield pd.DataFrame(outs)
 
-        grouped = self.df.groupBy(*keys) if keys else self.df.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType="x double, p double",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return self._stateful(self.df, handler, out_schema, "x double, p double")
 
     def anomaly(self, seconds: float, z: float = 3.0,
                 min_periods: int = 2) -> DataFrame:
@@ -2543,7 +2365,7 @@ class StreamFrame:
                     n = len(arr)
                     sd = float(arr.std())  # population std, ddof=0
                     if n >= mp and sd > 0:
-                        zs = round((x - float(arr.mean())) / sd, 6)
+                        zs = _round6((x - float(arr.mean())) / sd)
                         a = abs(zs) >= zcut
                     else:
                         zs, a = None, False
@@ -2556,13 +2378,8 @@ class StreamFrame:
             if outs:
                 yield pd.DataFrame(outs)
 
-        grouped = self.df.groupBy(*keys) if keys else self.df.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType="bt array<long>, bv array<double>",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        return self._stateful(
+            self.df, handler, out_schema, "bt array<long>, bv array<double>"
         )
 
     def heavy_hitters(self, k: int = 100, by: str | None = None) -> DataFrame:
@@ -2613,13 +2430,8 @@ class StreamFrame:
                     ]
                 )
 
-        grouped = self.df.groupBy(*keys) if keys else self.df.groupBy(F.lit(0).alias("__g"))
-        return grouped.applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType="items array<string>, counts array<long>, n long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        return self._stateful(
+            self.df, handler, out_schema, "items array<string>, counts array<long>, n long"
         )
 
     def attribution(
@@ -2678,7 +2490,7 @@ class StreamFrame:
             writer = writer.trigger(availableNow=True)
         return self._sized_start(writer, sink_df=df)
 
-    def _sized_start(self, writer, sink_df: DataFrame | None = None):
+    def _sized_start(self, writer, sink_df: DataFrame):
         """Start a streaming query with the state-shuffle width derived
         from the source size (``_stream_shuffle_partitions``; guide
         §2.2 — AQE cannot coalesce stateful streaming shuffles). The
@@ -2687,8 +2499,10 @@ class StreamFrame:
         after without racing the micro-batch thread. Callers pass the
         frame the writer was built from as ``sink_df`` (the public
         route — r11 used the private ``DataStreamWriter._df``, which a
-        Spark upgrade could silently drop); without it the frame the
-        StreamFrame wraps is inspected instead."""
+        Spark upgrade could silently drop). It is required: the source
+        frame this StreamFrame wraps never holds the pandas-state node
+        of a transformed sink, so probing it would narrow pandas-state
+        streams silently."""
         spark = self.df.sparkSession
         parts = _stream_shuffle_partitions(spark, self.src_bytes)
         explicit = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS") is not None
@@ -2703,8 +2517,7 @@ class StreamFrame:
             # running_agg at one partition), so they keep the session
             # width, which is already sized to the cluster.
             try:
-                sink = sink_df if sink_df is not None else self.df
-                plan = sink._jdf.queryExecution().analyzed().toString()
+                plan = sink_df._jdf.queryExecution().analyzed().toString()
             except Exception:  # noqa: BLE001 — can't inspect: don't narrow
                 plan = "FlatMapGroupsInPandasWithState"
             if "FlatMapGroupsInPandasWithState" in plan or "MapInPandas" in plan:

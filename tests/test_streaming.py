@@ -2111,3 +2111,123 @@ def test_stream_state_width_derivation(spark, stream_dir):
     q2.awaitTermination()
     ops2 = q2.lastProgress["stateOperators"]
     assert ops2 and ops2[0]["numShufflePartitions"] == sess, ops2
+
+    # sink_df is required: the source-frame probe it replaced could
+    # never see the pandas-state node of a transformed sink
+    with pytest.raises(TypeError):
+        sf2._sized_start(w2)
+
+
+def _ordered_files(spark, tmp_path, batches, schema):
+    """One parquet file per entry of ``batches`` in a fresh directory,
+    mtimes ascending so ``maxFilesPerTrigger=1`` picks them in order."""
+    import shutil
+    import time as _time
+
+    out = str(tmp_path / "ordered")
+    os.makedirs(out)
+    t0 = _time.time()
+    for i, rows in enumerate(batches):
+        stage = str(tmp_path / f"ordered_stage_{i}")
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(stage)
+        part = [f for f in os.listdir(stage) if f.endswith(".parquet")][0]
+        dst = os.path.join(out, f"f{i}.parquet")
+        shutil.copyfile(os.path.join(stage, part), dst)
+        os.utime(dst, (t0 + i, t0 + i))
+    return out
+
+
+def test_stateful_prologue_swaps_worker_zipimporters(spark, tmp_path):
+    """Every handler routed through ``StreamFrame._stateful`` runs the
+    worker prologue first: from the second micro-batch of a drain on,
+    the reused Python worker holds no plain ``zipimporter`` whose
+    ``invalidate_caches`` would re-read pyspark.zip or the spark-core
+    jar on every task."""
+    import sys
+
+    from eventkit_spark.streaming.stream import StreamFrame
+
+    schema = "user_id long, value double"
+    src = _ordered_files(spark, tmp_path, [[(1, float(i))] for i in range(3)], schema)
+    sdf = (
+        spark.readStream.format("parquet").schema(schema)
+        .option("maxFilesPerTrigger", 1).load(src)
+    )
+    sf = StreamFrame(sdf, value_cols=["value"], ts_col="value", key_cols=["user_id"])
+
+    def probe(key, pdfs, state):
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        for _ in pdfs:
+            pass
+        batch = state.get[0] + 1 if state.exists else 0
+        state.update((batch,))
+        zips = [imp for imp in sys.path_importer_cache.values()
+                if isinstance(imp, zipimport.zipimporter)]
+        plain = sum(type(imp) is zipimport.zipimporter for imp in zips)
+        yield pd.DataFrame({"batch": [batch], "zips": [len(zips)], "plain": [plain]})
+
+    sink = sf._stateful(sf.df, probe, "batch long, zips long, plain long", "batch long")
+    out = sf.run_available_now(sink_df=sink, name="ek_zip_probe")
+    rows = sorted((r["batch"], r["zips"], r["plain"]) for r in out.collect())
+    assert [r[0] for r in rows] == [0, 1, 2], rows
+    if not any(r[1] for r in rows):
+        pytest.skip("the Python worker imports nothing from a zip archive")
+    if sys.version_info >= (3, 13):
+        pytest.skip("CPython 3.13+ invalidates zip caches lazily; no swap")
+    assert all(r[2] == 0 for r in rows[1:]), rows
+
+
+def test_round6_tie_parity_stream_vs_batch(spark, tmp_path):
+    """Batch and stream twins round half away from zero alike: at the
+    tie 0.1234565 Python ``round`` gives 0.123456, the batch kernels
+    (and F.round, the batch anomaly z-score's rounder) 0.123457."""
+    import datetime as dt
+
+    from eventkit_spark._worker import _round6
+    from eventkit_spark.sources.tables import from_dataframe
+    from eventkit_spark.streaming.stream import StreamFrame
+
+    tie = 0.1234565
+    schema = "event_id long, ts timestamp, user_id long, value double"
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [(0, t0, 1, tie), (1, t0 + dt.timedelta(seconds=1), 1, 0.0)]
+    src = _ordered_files(spark, tmp_path, [rows], schema)
+    sdf = spark.readStream.format("parquet").schema(schema).load(src)
+    batch = from_dataframe(
+        spark.read.parquet(src), value_cols=["value"], seq_col="event_id",
+        ts_col="ts", key_cols=["user_id"],
+    )
+    twins = {
+        "cusum": (lambda x: x.cusum(0.0, h=10.0), ["cusum_hi", "cusum_lo", "alarm"]),
+        "holt": (lambda x: x.holt(), ["level", "trend", "forecast"]),
+        "kalman1d": (lambda x: x.kalman1d(), ["kf_x", "kf_p", "kf_gain"]),
+    }
+    for name, (op, cols) in twins.items():
+        sf = StreamFrame(sdf, value_cols=["value"], ts_col="ts", key_cols=["user_id"])
+        got = sf.run_available_now(sink_df=op(sf), name=f"ek_tie_{name}")
+        sp = sorted(tuple(r[c] for c in ["ts", *cols]) for r in got.collect())
+        bp = sorted(tuple(r[c] for c in ["ts", *cols]) for r in op(batch).df.collect())
+        assert sp == bp, (name, sp, bp)
+        assert sp[0][1] == 0.123457, (name, sp)
+    f_round = spark.range(1).select(F.round(F.lit(tie), 6).alias("r")).first()["r"]
+    assert f_round == _round6(tie) == 0.123457
+
+
+def test_one_apply_in_pandas_with_state_call_site():
+    """Every stateful stream handler goes through
+    ``StreamFrame._stateful`` — the one place the worker prologue and
+    the unkeyed fallback live."""
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "eventkit_spark"
+    )
+    n = 0
+    for dirpath, _dirs, files in os.walk(root):
+        for f in files:
+            if f.endswith(".py"):
+                with open(os.path.join(dirpath, f)) as fh:
+                    n += fh.read().count(".applyInPandasWithState(")
+    assert n == 1

@@ -1,0 +1,91 @@
+"""The by-value worker helpers (``eventkit_spark._worker``), without
+Spark: the zip-importer prologue against a real archive, and the shared
+half-away rounder."""
+
+import importlib
+import os
+import sys
+import zipfile
+import zipimport
+
+import numpy as np
+import pytest
+
+from eventkit_spark._worker import _make_worker_prologue, _round6
+
+eager_zip_invalidation = pytest.mark.skipif(
+    sys.version_info >= (3, 13),
+    reason="CPython 3.13+ invalidates zip caches lazily; the prologue is a no-op",
+)
+
+
+def _write_zip(path, files):
+    with zipfile.ZipFile(path, "w") as z:
+        for name, body in files.items():
+            z.writestr(name, body)
+
+
+@eager_zip_invalidation
+def test_prologue_rereads_an_archive_only_when_it_changes(tmp_path, monkeypatch):
+    zpath = str(tmp_path / "lib.zip")
+    _write_zip(zpath, {"ek_zip_probe_old.py": "V = 1\n"})
+    reads = []
+    real_read = zipimport._read_directory
+
+    def counting_read(archive):
+        if archive == zpath:
+            reads.append(archive)
+        return real_read(archive)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting_read)
+    monkeypatch.syspath_prepend(zpath)
+    imp = zipimport.zipimporter(zpath)
+    monkeypatch.setitem(sys.path_importer_cache, zpath, imp)
+
+    # the stock importer re-reads the directory on every invalidation
+    n = len(reads)
+    importlib.invalidate_caches()
+    assert len(reads) == n + 1
+
+    prologue = _make_worker_prologue()
+    prologue()
+    assert type(imp) is not zipimport.zipimporter
+    assert isinstance(imp, zipimport.zipimporter)
+    n = len(reads)
+    for _ in range(3):
+        importlib.invalidate_caches()
+    assert len(reads) == n
+
+    # once per copy: a second call leaves importers created since alone
+    later = str(tmp_path / "later.zip")
+    _write_zip(later, {"ek_zip_probe_later.py": ""})
+    late_imp = zipimport.zipimporter(later)
+    monkeypatch.setitem(sys.path_importer_cache, later, late_imp)
+    prologue()
+    assert type(late_imp) is zipimport.zipimporter
+
+    # a rewritten archive is re-read once, and its new module imports
+    _write_zip(zpath, {"ek_zip_probe_old.py": "V = 1\n",
+                       "ek_zip_probe_new.py": "V = 2\n"})
+    st = os.stat(zpath)
+    os.utime(zpath, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    n = len(reads)
+    importlib.invalidate_caches()
+    assert len(reads) == n + 1
+    try:
+        assert importlib.import_module("ek_zip_probe_new").V == 2
+    finally:
+        sys.modules.pop("ek_zip_probe_new", None)
+    importlib.invalidate_caches()
+    assert len(reads) == n + 1
+
+
+def test_round6_is_half_away_from_zero():
+    # 0.1234565 sits on a 5e-7 tie: Python round (half-even on the
+    # exact binary value) goes down, the batch kernels and F.round up
+    assert round(0.1234565, 6) == 0.123456
+    assert _round6(0.1234565) == 0.123457
+    assert _round6(-0.1234565) == -0.123457
+    assert list(_round6(np.array([0.1234565, -0.1234565, 1.0]))) == [
+        0.123457, -0.123457, 1.0,
+    ]
