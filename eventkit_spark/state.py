@@ -1,13 +1,23 @@
 """Sequential stateful kernels that have no window-function form.
 
-Two operators in the reference are true sequential recurrences
-(SURVEY.md §4.2): Throttle's re-timestamping (eventkit/ops/timing.py:104-184)
-and exact EMA for streams too long for the closed-form window scan
-(eventkit/ops/aggregate.py:95-111). Both run as Arrow-batched
-``applyInPandas`` kernels: one linear scan per key partition — fully
-parallel across keys, O(n) per key, no driver collection. For unkeyed
-(globally ordered) streams they degrade to a single task, same as the
-reference's single process.
+Each recurrence here (SURVEY.md §4.2) — Throttle's re-timestamping
+(eventkit/ops/timing.py:104-184), CUSUM, Holt and the 1-D Kalman filter —
+is defined once, as the step a ``_make_<op>_step(params)`` factory
+builds: ``step(state, row inputs) -> (state, row outputs)``, seeded with
+``None`` before a key's first row. Batch and streaming run the same
+step. The batch side folds it over key-sorted ``mapInPandas``
+partitions (``_fold`` for the one-double-in recurrences, ``throttle``'s
+own kernel for its cost/status/limit-change columns); the stream twins
+in ``streaming.stream`` fold it over each key's micro-batch with the
+state carried in the state store. The factories return closures, so
+cloudpickle ships each step by value (see ``_worker``).
+
+Every kernel is one linear scan per key partition — fully parallel
+across keys, O(n) per key, no driver collection. For unkeyed (globally
+ordered) streams it degrades to a single task, same as the reference's
+single process. Exact EMA for streams too long for the closed-form
+window scan (eventkit/ops/aggregate.py:95-111) stays a grouped
+``applyInPandas`` loop.
 """
 
 from __future__ import annotations
@@ -69,6 +79,57 @@ def ema_exact(ef, n: int | None = None, weight: float | None = None):
     return ef._with(df=df.select(*[f.name for f in schema.fields]))
 
 
+def _arranged(src, key_cols, seq_col):
+    """The fold drivers' plan: one shuffle on the keys, then each
+    partition sorted so every key's rows are contiguous and in sequence
+    order (one task when unkeyed)."""
+    if key_cols:
+        return src.repartition(*[F.col(k) for k in key_cols]).sortWithinPartitions(
+            *key_cols, seq_col
+        )
+    return src.coalesce(1).sortWithinPartitions(seq_col)
+
+
+def _make_throttle_step(maximum: float, interval: float, sched=()):
+    """Throttle's recurrence as one step: ``step(st, t, c) -> (st, emit)``
+    admits one row of cost ``c`` arriving at ``t`` (epoch seconds) and
+    returns its emit time. ``sched`` is the sorted
+    ``(ts, maximum, interval)`` limit-change list.
+
+    The state is ``None`` before a key's first row, then
+    ``(window, used, last_emit, maximum, interval, next_change)`` where
+    ``window`` is a deque of in-window ``(emit, cost)`` pairs that the
+    step mutates in place (a copy per row would cost O(window))."""
+    from collections import deque
+
+    def step(st, t, c):
+        if st is None:
+            st = (deque(), 0.0, -float("inf"), maximum, interval, 0)
+        window, used, last_emit, mx, iv, si = st
+        # FIFO: a queued row cannot emit before its predecessor
+        t = max(t, last_emit)
+        # earliest admissible time given the sliding budget
+        while True:
+            while si < len(sched) and sched[si][0] <= t:
+                _, mx, iv = sched[si]
+                si += 1
+            while window and window[0][0] <= t - iv:
+                used -= window.popleft()[1]
+            if used + c <= mx or not window:
+                break
+            # wait until the oldest in-window emission expires — or
+            # until a pending limit change, which may raise the budget
+            t_next = window[0][0] + iv
+            if si < len(sched) and sched[si][0] < t_next:
+                t = sched[si][0]
+            else:
+                t = t_next
+        window.append((t, c))
+        return (window, used + c, t, mx, iv, si), t
+
+    return step
+
+
 def throttle(ef, maximum: float, interval: float, cost: float = 1.0, cost_expr=None,
              status: bool = False, limit_changes=None):
     """Rate-limit without dropping: at most ``maximum`` total cost per
@@ -104,6 +165,7 @@ def throttle(ef, maximum: float, interval: float, cost: float = 1.0, cost_expr=N
                 t = pd.Timestamp(t).timestamp()
             sched.append((float(t), float(mx), float(iv)))
         sched.sort()
+    step = _make_throttle_step(maximum, interval, sched)
 
     src = ef.df
     if cost_expr is not None:
@@ -115,87 +177,29 @@ def throttle(ef, maximum: float, interval: float, cost: float = 1.0, cost_expr=N
     key_cols = list(ef.key_cols)
     has_cost_col = cost_expr is not None
 
-    class _KeyState:
-        __slots__ = ("window", "used", "last_emit", "si", "maximum", "interval")
-
-        def __init__(self):
-            from collections import deque
-
-            self.window = deque()  # (emit_time, cost)
-            self.used = 0.0
-            self.last_emit = -float("inf")
-            self.si = 0  # next pending limit_changes index
-            self.maximum = maximum
-            self.interval = interval
-
-    def _run(times, costs, st: _KeyState):
-        out = times.copy()
-        window, used, last_emit = st.window, st.used, st.last_emit
-        mx, iv, si = st.maximum, st.interval, st.si
-        for i in range(len(out)):
-            c = costs[i] if costs is not None else cost
-            # FIFO: a queued row cannot emit before its predecessor
-            t = max(times[i], last_emit)
-            # earliest admissible time given the sliding budget
-            while True:
-                while si < len(sched) and sched[si][0] <= t:
-                    _, mx, iv = sched[si]
-                    si += 1
-                while window and window[0][0] <= t - iv:
-                    used -= window.popleft()[1]
-                if used + c <= mx or not window:
-                    break
-                # wait until the oldest in-window emission expires — or
-                # until a pending limit change, which may raise the budget
-                t_next = window[0][0] + iv
-                if si < len(sched) and sched[si][0] < t_next:
-                    t = sched[si][0]
-                else:
-                    t = t_next
-            out[i] = t
-            last_emit = t
-            window.append((t, c))
-            used += c
-        st.used, st.last_emit = used, last_emit
-        st.maximum, st.interval, st.si = mx, iv, si
-        return out
-
     def kernel(batches):
         # per-PARTITION kernel handling many keys per Arrow batch: with
         # thousands of small keys, per-group applyInPandas pays one
         # Python/Arrow round trip per key; mapInPandas over
         # repartition+sortWithinPartitions pays one per batch. Keys are
         # contiguous (sorted), but Arrow may split one key across
-        # batches — state carries over via (cur_key, cur_state).
+        # batches — state carries over via (cur_key, st).
         import numpy as np
 
         _worker_prologue()
-        cur_key = object()  # sentinel unequal to any real key
-        cur_state = _KeyState()
+        cur_key, st = object(), None  # sentinel unequal to any real key
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             times = pdf[ts_col].astype("int64").to_numpy() / 1e9  # epoch s
             costs = pdf["__ek_cost"].to_numpy() if has_cost_col else None
+            keys = (list(zip(*[pdf[k].to_numpy() for k in key_cols])) if key_cols
+                    else [()] * len(pdf))
             out = np.empty_like(times)
-            if key_cols:
-                keys = pdf[key_cols[0]].to_numpy() if len(key_cols) == 1 else list(
-                    zip(*[pdf[k].to_numpy() for k in key_cols])
-                )
-                start = 0
-                for i in range(1, len(times) + 1):
-                    if i == len(times) or keys[i] != keys[start]:
-                        if keys[start] != cur_key:
-                            cur_key = keys[start]
-                            cur_state = _KeyState()
-                        out[start:i] = _run(
-                            times[start:i],
-                            costs[start:i] if costs is not None else None,
-                            cur_state,
-                        )
-                        start = i
-            else:
-                out[:] = _run(times, costs, cur_state)
+            for i in range(len(times)):
+                if keys[i] != cur_key:
+                    cur_key, st = keys[i], None
+                st, out[i] = step(st, times[i], cost if costs is None else costs[i])
             # whole microseconds: float-derived ns residue makes the
             # Arrow ns->us cast "unsafe"; keep the input's tz-awareness
             micros = np.round(out * 1e6).astype("int64")
@@ -217,14 +221,101 @@ def throttle(ef, maximum: float, interval: float, cost: float = 1.0, cost_expr=N
     )
     if status:
         out_schema += ", throttled boolean"
-    if key_cols:
-        arranged = src.repartition(*[F.col(k) for k in key_cols]).sortWithinPartitions(
-            *key_cols, seq_col
-        )
-    else:
-        arranged = src.coalesce(1).sortWithinPartitions(seq_col)
-    df = arranged.mapInPandas(kernel, schema=out_schema)
+    df = _arranged(src, key_cols, seq_col).mapInPandas(kernel, schema=out_schema)
     return ef._with(df=df.select(*out_cols))
+
+
+def _make_scan():
+    # factory for the by-value cloudpickle rationale of _worker.py: the
+    # batch fold kernel and the stream fold handler both ship it
+    def _scan(step, st, x, out, starts=()):
+        """Fold ``step`` over the non-empty float64 array ``x`` from the
+        carried state ``st`` (None before a key's first row). Returns
+        the last state and one array per ``out`` ``(name, sql type)``
+        column, doubles rounded by ``_round6``. At each index in
+        ``starts`` a new key's run begins and the state restarts from
+        None."""
+        import numpy as np
+
+        rows = []
+        bounds = [0, *starts, len(x)]
+        for lo, hi in zip(bounds, bounds[1:]):
+            if lo:
+                st = None
+            for v in x[lo:hi]:
+                st, o = step(st, v)
+                rows.append(o)
+        cols = {}
+        for (name, typ), col in zip(out, zip(*rows)):
+            if typ == "double":
+                cols[name] = _round6(np.array(col, dtype=np.float64))
+            else:
+                cols[name] = np.array(col, dtype=bool)
+        return st, cols
+
+    return _scan
+
+
+_scan = _make_scan()
+
+
+def _fold(ef, step, out):
+    """The batch driver of a one-double-in recurrence: ``step(st, x) ->
+    (st, row outputs)`` folded over each key's rows in sequence order,
+    appending the ``out`` ``(name, sql type)`` columns.
+
+    One Arrow-batched linear pass per key partition, fully parallel
+    across keys; unkeyed degrades to a single task (the reference's own
+    total-order semantics). Keys arrive contiguous, so the kernel
+    carries one key's state at a time, across Arrow batch splits too."""
+    value_col = ef.value_cols[0]
+    key_cols = list(ef.key_cols)
+    src = ef.df
+
+    def kernel(batches):
+        _worker_prologue()
+        cur_key, st = object(), None  # sentinel unequal to any real key
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            x = pdf[value_col].to_numpy(dtype="float64")
+            keys = (list(zip(*[pdf[k].to_numpy() for k in key_cols])) if key_cols
+                    else [()] * len(pdf))
+            if keys[0] != cur_key:
+                st = None
+            starts = [i for i in range(1, len(keys)) if keys[i] != keys[i - 1]]
+            cur_key = keys[-1]
+            st, cols = _scan(step, st, x, out, starts)
+            res = pdf.copy()
+            for name, arr in cols.items():
+                res[name] = arr
+            yield res
+
+    out_schema = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in src.schema.fields
+    ) + "".join(f", {name} {typ}" for name, typ in out)
+    df = _arranged(src, key_cols, ef.seq_col).mapInPandas(kernel, schema=out_schema)
+    return ef._with(df=df, value_cols=[*ef.value_cols, *(name for name, _ in out)])
+
+
+_CUSUM_OUT = (("cusum_hi", "double"), ("cusum_lo", "double"), ("alarm", "boolean"))
+_HOLT_OUT = (("level", "double"), ("trend", "double"), ("forecast", "double"))
+_KALMAN_OUT = (("kf_x", "double"), ("kf_p", "double"), ("kf_gain", "double"))
+
+
+def _make_cusum_step(target: float, h: float, slack: float, reset: bool):
+    """CUSUM's recurrence as one step over ``(hi, lo)``, seeded
+    ``(0, 0)``; outputs ``(hi, lo, alarm)``."""
+    kt, kh, kk = float(target), float(h), float(slack)
+
+    def step(st, x):
+        ph, pl = (0.0, 0.0) if st is None else st
+        nh = max(0.0, ph + (x - kt) - kk)
+        nl = max(0.0, pl - (x - kt) - kk)
+        a = nh > kh or nl > kh
+        return ((0.0, 0.0) if (a and reset) else (nh, nl)), (nh, nl, a)
+
+    return step
 
 
 def cusum(ef, target: float, h: float, slack: float = 0.0, reset: bool = True):
@@ -248,54 +339,27 @@ def cusum(ef, target: float, h: float, slack: float = 0.0, reset: bool = True):
     Reference analog: none (the reference cuts/thins streams; this is
     the monitoring primitive the engine adds next to ``anomaly``).
     """
-    import numpy as np
+    return _fold(ef, _make_cusum_step(target, h, slack, reset), _CUSUM_OUT)
 
-    value_col = ef.value_cols[0]
-    seq_col = ef.seq_col
-    key_cols = list(ef.key_cols)
-    src = ef.df
-    kt = float(target)
-    kk = float(slack)
-    kh = float(h)
 
-    def kernel(batches):
-        _worker_prologue()
-        state = {}  # key tuple -> (hi, lo); carries across batch splits
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = pdf[value_col].to_numpy(dtype="float64")
-            if key_cols:
-                keys = list(zip(*[pdf[k].to_numpy() for k in key_cols]))
-            else:
-                keys = [()] * len(pdf)
-            hi = np.empty(len(x))
-            lo = np.empty(len(x))
-            al = np.empty(len(x), dtype=bool)
-            for i in range(len(x)):
-                ph, pl = state.get(keys[i], (0.0, 0.0))
-                nh = max(0.0, ph + (x[i] - kt) - kk)
-                nl = max(0.0, pl - (x[i] - kt) - kk)
-                a = nh > kh or nl > kh
-                hi[i], lo[i], al[i] = nh, nl, a
-                state[keys[i]] = (0.0, 0.0) if (a and reset) else (nh, nl)
-            out = pdf.copy()
-            out["cusum_hi"] = _round6(hi)
-            out["cusum_lo"] = _round6(lo)
-            out["alarm"] = al
-            yield out
+def _make_holt_step(alpha: float, beta: float):
+    """Holt's recurrence as one step over ``(level, trend)``; outputs
+    ``(level, trend, level + trend)``."""
+    a = float(alpha)
+    b = float(beta)
+    one_a = 1.0 - a
+    one_b = 1.0 - b
 
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in src.schema.fields
-    ) + ", cusum_hi double, cusum_lo double, alarm boolean"
-    if key_cols:
-        arranged = src.repartition(*[F.col(k) for k in key_cols]).sortWithinPartitions(
-            *key_cols, seq_col
-        )
-    else:
-        arranged = src.coalesce(1).sortWithinPartitions(seq_col)
-    df = arranged.mapInPandas(kernel, schema=out_schema)
-    return ef._with(df=df, value_cols=[*ef.value_cols, "cusum_hi", "cusum_lo", "alarm"])
+    def step(st, x):
+        if st is None:
+            nl, nt = x, 0.0
+        else:
+            pl, pt = st
+            nl = a * x + one_a * (pl + pt)
+            nt = b * (nl - pl) + one_b * pt
+        return (nl, nt), (nl, nt, nl + nt)
+
+    return step
 
 
 def holt(ef, alpha: float = 0.5, beta: float = 0.3):
@@ -318,57 +382,26 @@ def holt(ef, alpha: float = 0.5, beta: float = 0.3):
     the same way in the oracle) so a recursive-CTE replay is
     bit-identical.
     """
-    import numpy as np
+    return _fold(ef, _make_holt_step(alpha, beta), _HOLT_OUT)
 
-    value_col = ef.value_cols[0]
-    seq_col = ef.seq_col
-    key_cols = list(ef.key_cols)
-    src = ef.df
-    a = float(alpha)
-    b = float(beta)
-    one_a = 1.0 - a
-    one_b = 1.0 - b
 
-    def kernel(batches):
-        _worker_prologue()
-        state = {}  # key tuple -> (level, trend)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = pdf[value_col].to_numpy(dtype="float64")
-            if key_cols:
-                keys = list(zip(*[pdf[k].to_numpy() for k in key_cols]))
-            else:
-                keys = [()] * len(pdf)
-            lv = np.empty(len(x))
-            tr = np.empty(len(x))
-            for i in range(len(x)):
-                prev = state.get(keys[i])
-                if prev is None:
-                    nl, nt = x[i], 0.0
-                else:
-                    pl, pt = prev
-                    nl = a * x[i] + one_a * (pl + pt)
-                    nt = b * (nl - pl) + one_b * pt
-                lv[i], tr[i] = nl, nt
-                state[keys[i]] = (nl, nt)
-            out = pdf.copy()
-            out["level"] = _round6(lv)
-            out["trend"] = _round6(tr)
-            out["forecast"] = _round6(lv + tr)
-            yield out
+def _make_kalman_step(q: float, r: float, p0: float):
+    """The 1-D Kalman recurrence as one step over ``(x, p)``; outputs
+    ``(x, p, gain)``."""
+    kq, kr, kp0 = float(q), float(r), float(p0)
 
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in src.schema.fields
-    ) + ", level double, trend double, forecast double"
-    if key_cols:
-        arranged = src.repartition(*[F.col(k) for k in key_cols]).sortWithinPartitions(
-            *key_cols, seq_col
-        )
-    else:
-        arranged = src.coalesce(1).sortWithinPartitions(seq_col)
-    df = arranged.mapInPandas(kernel, schema=out_schema)
-    return ef._with(df=df, value_cols=[*ef.value_cols, "level", "trend", "forecast"])
+    def step(st, z):
+        if st is None:
+            nx, np_, nk = z, kp0, 0.0
+        else:
+            px, pp = st
+            pm = pp + kq
+            nk = pm / (pm + kr)
+            nx = px + nk * (z - px)
+            np_ = (1.0 - nk) * pm
+        return (nx, np_), (nx, np_, nk)
+
+    return step
 
 
 def kalman1d(ef, q: float = 0.01, r: float = 1.0, p0: float = 1.0):
@@ -389,54 +422,4 @@ def kalman1d(ef, q: float = 0.01, r: float = 1.0, p0: float = 1.0):
     key partition, cross-batch state carry, recursive-CTE oracle in
     the same float-op order.
     """
-    import numpy as np
-
-    value_col = ef.value_cols[0]
-    seq_col = ef.seq_col
-    key_cols = list(ef.key_cols)
-    src = ef.df
-    kq, kr, kp0 = float(q), float(r), float(p0)
-
-    def kernel(batches):
-        _worker_prologue()
-        state = {}  # key tuple -> (x, p)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            z = pdf[value_col].to_numpy(dtype="float64")
-            if key_cols:
-                keys = list(zip(*[pdf[k].to_numpy() for k in key_cols]))
-            else:
-                keys = [()] * len(pdf)
-            xs = np.empty(len(z))
-            ps = np.empty(len(z))
-            ks = np.empty(len(z))
-            for i in range(len(z)):
-                prev = state.get(keys[i])
-                if prev is None:
-                    nx, np_, nk = z[i], kp0, 0.0
-                else:
-                    px, pp = prev
-                    pm = pp + kq
-                    nk = pm / (pm + kr)
-                    nx = px + nk * (z[i] - px)
-                    np_ = (1.0 - nk) * pm
-                xs[i], ps[i], ks[i] = nx, np_, nk
-                state[keys[i]] = (nx, np_)
-            out = pdf.copy()
-            out["kf_x"] = _round6(xs)
-            out["kf_p"] = _round6(ps)
-            out["kf_gain"] = _round6(ks)
-            yield out
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in src.schema.fields
-    ) + ", kf_x double, kf_p double, kf_gain double"
-    if key_cols:
-        arranged = src.repartition(*[F.col(k) for k in key_cols]).sortWithinPartitions(
-            *key_cols, seq_col
-        )
-    else:
-        arranged = src.coalesce(1).sortWithinPartitions(seq_col)
-    df = arranged.mapInPandas(kernel, schema=out_schema)
-    return ef._with(df=df, value_cols=[*ef.value_cols, "kf_x", "kf_p", "kf_gain"])
+    return _fold(ef, _make_kalman_step(q, r, p0), _KALMAN_OUT)

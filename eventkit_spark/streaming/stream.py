@@ -76,6 +76,7 @@ from __future__ import annotations
 
 import math
 import os
+from collections import deque
 from typing import Callable, Iterator, Sequence
 
 import numpy as np
@@ -86,45 +87,11 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
 from .._worker import _round6, _worker_prologue
+from ..state import (
+    _CUSUM_OUT, _HOLT_OUT, _KALMAN_OUT, _make_cusum_step, _make_holt_step,
+    _make_kalman_step, _make_throttle_step, _scan,
+)
 from ..session import _size_to_bytes, session_width
-
-
-def tws_available(spark: SparkSession | None = None) -> bool:
-    """True when Spark's ``transformWithStateInPandas`` (Spark 4's
-    successor to applyInPandasWithState: timers, multiple state
-    variables, TTL) can actually RUN here. Three independent runtime
-    requirements, none implied by the others:
-
-    - the API must exist on ``GroupedData``;
-    - the protobuf package its state-server protocol needs must import
-      (this container ships pyspark 4.1 without protobuf, so the call
-      crashes the TWS driver worker);
-    - the session's state store provider must be RocksDB — TWS refuses
-      the default HDFSBackedStateStoreProvider at query start, so a
-      protobuf-equipped environment with the default provider would
-      fail where the classic applyInPandasWithState path works.
-
-    Pass the session to check the provider; with ``spark=None`` the
-    active session is probed (no-session → provider unknown → False).
-    Kernels gate on this and keep applyInPandasWithState as the
-    portable path."""
-    try:
-        from pyspark.sql.group import GroupedData
-
-        if not hasattr(GroupedData, "transformWithStateInPandas"):
-            return False
-        from google.protobuf import descriptor  # noqa: F401
-
-        if spark is None:
-            spark = SparkSession.getActiveSession()
-        if spark is None:
-            return False
-        provider = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", ""
-        )
-        return "RocksDB" in (provider or "")
-    except Exception:  # noqa: BLE001 — any import/runtime gap: not available
-        return False
 
 
 def _dir_bytes(path: str) -> int:
@@ -219,8 +186,8 @@ _sorted_chunks = _make_sorted_chunks()
 
 def _make_running_scan():
     # factory for the same by-VALUE cloudpickle rationale as
-    # _make_sorted_chunks: both running_agg kernels (classic +
-    # transformWithStateInPandas) ship this helper inside their pickle.
+    # _make_sorted_chunks: the running_agg handler ships this helper
+    # inside its pickle.
     def _running_scan(x, w, cnt, s, mn, mx, ema):
         """One chunk of the per-key running aggregates as seeded
         vectorized scans, with SQL-WINDOW missing-value semantics
@@ -311,67 +278,6 @@ def _make_running_scan():
 
 
 _running_scan = _make_running_scan()
-
-
-def _make_running_agg_processor(keys, ts_col, value_col, ema_n):
-    """Build the ``StatefulProcessor`` behind ``_running_agg_tws``.
-
-    Module-level factory (same pickling rationale as
-    ``_make_sorted_chunks``: the returned class has a ``<locals>``
-    qualname so cloudpickle ships the instance by value) — and, unlike
-    a class buried inside the method, unit-testable with a stub state
-    handle even while the TWS runtime itself stays protobuf-gated
-    (tests/test_streaming.py::test_tws_processor_sorts_across_chunks).
-
-    Rows are drained through ``_sorted_chunks`` — ONE frame per key
-    micro-batch, sorted across ALL Arrow chunks — so the running
-    counters update in event-time order even when a group's batch spans
-    ``maxRecordsPerBatch`` boundaries (the r7-ADVICE ordering bug class
-    its applyInPandasWithState siblings fixed in r8)."""
-    from pyspark.sql.streaming import StatefulProcessor
-
-    w = 2.0 / (ema_n + 1)
-    state_schema = "rcount long, rsum double, rmin double, rmax double, ema double"
-    sorted_chunks = _sorted_chunks
-    running_scan = _running_scan
-
-    class _Run(StatefulProcessor):
-        def init(self, handle):
-            self._st = handle.getValueState("agg", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            # same vectorized seeded scans as the
-            # applyInPandasWithState sibling (r10): carries prepended,
-            # sum fold order sequential, ema within ~1 ulp of the bare
-            # recurrence; missing-value semantics pinned in
-            # _running_scan (NULL prefix, decay-by-q ema — r11)
-            import numpy as np
-
-            if self._st.exists():
-                cnt, s, mn, mx, ema = self._st.get()
-            else:
-                cnt, s, mn, mx, ema = 0, 0.0, None, None, None
-            for pdf in sorted_chunks(rows, ts_col):
-                if pdf.empty:
-                    continue
-                x = pdf[value_col].to_numpy(dtype=np.float64)
-                cols, (cnt, s, mn, mx, ema) = running_scan(
-                    x, w, cnt, s, mn, mx, ema
-                )
-                out = pdf[list(keys) + [ts_col]].copy()
-                miss = np.isnan(x)
-                out["value"] = (
-                    np.where(miss, None, x.astype(object)) if miss.any() else x
-                )
-                for name, arr in cols.items():
-                    out[name] = arr
-                yield out
-            self._st.update((cnt, s, mn, mx, ema))
-
-        def close(self):
-            pass
-
-    return _Run()
 
 
 def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> "StreamFrame":
@@ -700,12 +606,7 @@ class StreamFrame:
         return self._stateful(tagged, handler, out_schema, state_schema)
 
     # -- stateful running aggregates (emit one row per input row) -----
-    def running_agg(
-        self,
-        kinds: Sequence[str] = ("sum",),
-        ema_n: int = 10,
-        use_tws: bool | None = None,
-    ) -> DataFrame:
+    def running_agg(self, ema_n: int = 10) -> DataFrame:
         """Per-key running aggregates as an applyInPandasWithState
         handler — the streaming twin of SURVEY §2.4's cumulative
         windows. Emits one output row per input row; state is
@@ -714,18 +615,7 @@ class StreamFrame:
         Rows are processed in ts order within each micro-batch; state
         carries across batches (exactly the reference's per-stream
         running state, keyed).
-
-        ``use_tws`` opts into the Spark 4 ``transformWithStateInPandas``
-        form (same semantics; timers/multi-state for future kernels) —
-        default auto-detects via ``tws_available()``: the API needs the
-        RocksDB state store AND the protobuf package for its state
-        protocol, neither guaranteed everywhere applyInPandasWithState
-        runs, so the classic handler stays the portable default.
         """
-        if use_tws is None:
-            use_tws = tws_available(self.df.sparkSession)
-        if use_tws:
-            return self._running_agg_tws(ema_n)
         value_col = self.value_cols[0]
         ts_col = self.ts_col
         keys = self.key_cols
@@ -778,33 +668,6 @@ class StreamFrame:
                 yield pd.concat(outs, ignore_index=True)
 
         return self._stateful(self.df, handler, out_schema, state_schema)
-
-    def _running_agg_tws(self, ema_n: int) -> DataFrame:
-        """``transformWithStateInPandas`` form of ``running_agg`` — the
-        Spark 4 stateful API (ROADMAP migration item). Same semantics
-        and output schema; state is one ValueState tuple per key.
-        Requires ``tws_available()`` (RocksDB state store provider +
-        protobuf) — parity-tested where the runtime supports it
-        (tests/test_streaming.py::test_running_agg_tws_parity,
-        skipif-gated)."""
-        value_col = self.value_cols[0]
-        ts_col = self.ts_col
-        keys = list(self.key_cols)
-        out_schema = (
-            _keys_prefix(self.df, keys)
-            + f"{ts_col} {_sql_type(self.df, ts_col)}, value double, "
-            + "rcount long, rsum double, rmin double, rmax double, ema double"
-        )
-        processor = _make_running_agg_processor(keys, ts_col, value_col, ema_n)
-        grouped = (
-            self.df.groupBy(*keys) if keys else self.df.groupBy(F.lit(0).alias("__g"))
-        )
-        return grouped.transformWithStateInPandas(
-            processor,
-            outputStructType=out_schema,
-            outputMode="append",
-            timeMode="none",
-        )
 
     def changes(self) -> DataFrame:
         """Streaming Changes (select.py:102-112): drop consecutive
@@ -1674,10 +1537,10 @@ class StreamFrame:
 
     def throttle(self, maximum: float, interval: float, cost: float = 1.0) -> DataFrame:
         """Streaming Throttle: the same sliding-budget re-timestamping
-        recurrence as the batch kernel (state.py:50), with the in-window
-        emission deque carried in the state store per key — emits
-        (ts, emit_ts, value); identical output to the batch kernel over
-        the same recorded rows (parity-tested)."""
+        step as the batch kernel (``state._make_throttle_step``), with
+        the in-window emission deque carried in the state store per
+        key — emits (ts, emit_ts, value); identical output to the batch
+        kernel over the same recorded rows (parity-tested)."""
         value_col = self.value_cols[0]
         ts_col = self.ts_col
         keys = self.key_cols
@@ -1686,37 +1549,27 @@ class StreamFrame:
             _keys_prefix(self.df, keys)
             + f"{ts_col} {_sql_type(self.df, ts_col)}, emit_ts timestamp, value {vt}"
         )
+        step = _make_throttle_step(maximum, interval)
 
         def handler(key, pdfs, state: GroupState):
+            st = None
             if state.exists:
                 wt, wc, last_emit = state.get
-                wt, wc = list(wt), list(wc)
-            else:
-                wt, wc, last_emit = [], [], -float("inf")
-            used = sum(wc)
-            outs = []
+                st = (deque(zip(wt, wc)), sum(wc), last_emit, maximum, interval, 0)
             for pdf in _sorted_chunks(pdfs, ts_col):
-                for _, row in pdf.iterrows():
-                    t = max(row[ts_col].value / 1e9, last_emit)  # epoch s, matches batch kernel
-                    while True:
-                        while wt and wt[0] <= t - interval:
-                            wt.pop(0)
-                            used -= wc.pop(0)
-                        if used + cost <= maximum or not wt:
-                            break
-                        t = wt[0] + interval
-                    last_emit = t
-                    wt.append(t)
-                    wc.append(cost)
-                    used += cost
-                    outs.append(
-                        {**{k: row[k] for k in keys}, ts_col: row[ts_col],
-                         "emit_ts": pd.Timestamp(round(t * 1e6) * 1000),
-                         "value": row[value_col]}
-                    )
-            state.update((wt, wc, last_emit))
-            if outs:
-                yield pd.DataFrame(outs)
+                times = pdf[ts_col].astype("int64").to_numpy() / 1e9  # epoch s, as batch
+                emit = np.empty_like(times)
+                for i, t in enumerate(times):
+                    st, emit[i] = step(st, t, cost)
+                window, _, last_emit = st[:3]
+                state.update(([float(t) for t, _ in window],
+                              [float(c) for _, c in window], last_emit))
+                micros = np.round(emit * 1e6).astype("int64")
+                yield pd.DataFrame({
+                    **{c: pdf[c].to_numpy() for c in [*keys, ts_col]},
+                    "emit_ts": (micros * 1000).astype("datetime64[ns]"),
+                    "value": pdf[value_col].to_numpy(),
+                })
 
         return self._stateful(
             self.df, handler, out_schema, "wt array<double>, wc array<double>, last_emit double"
@@ -2203,6 +2056,36 @@ class StreamFrame:
 
         return self._stateful(self.df, handler, out_schema, "seen long")
 
+    def _fold(self, step, out, state_schema: str) -> DataFrame:
+        """The stream driver of a one-double-in recurrence
+        (``state._fold`` is its batch twin): the same ``step(st, x) ->
+        (st, row outputs)`` folded over each key's micro-batch in ts
+        order, its state carried in the state store. Emits the key, ts
+        and value of every row plus the ``out`` ``(name, sql type)``
+        columns."""
+        value_col = self.value_cols[0]
+        ts_col = self.ts_col
+        keys = self.key_cols
+        out_schema = (
+            _keys_prefix(self.df, keys)
+            + f"{ts_col} {_sql_type(self.df, ts_col)}, value double"
+            + "".join(f", {name} {typ}" for name, typ in out)
+        )
+
+        def handler(key, pdfs, state: GroupState):
+            st = state.get if state.exists else None
+            for pdf in _sorted_chunks(pdfs, ts_col):
+                x = pdf[value_col].to_numpy(dtype=np.float64)
+                st, cols = _scan(step, st, x, out)
+                state.update(st)
+                # one constructor call: per-column inserts into a copied
+                # frame cost more than the fold itself on small key groups
+                yield pd.DataFrame(
+                    {**{c: pdf[c].to_numpy() for c in [*keys, ts_col]}, "value": x, **cols}
+                )
+
+        return self._stateful(self.df, handler, out_schema, state_schema)
+
     def cusum(self, target: float, h: float, slack: float = 0.0,
               reset: bool = True) -> DataFrame:
         """Streaming CUSUM twin (state.py:cusum): the clamped two-sided
@@ -2210,36 +2093,9 @@ class StreamFrame:
         tick-for-tick equal to the batch kernel over the same rows
         (parity-tested). Emits every row with its accumulators + alarm.
         """
-        value_col = self.value_cols[0]
-        ts_col = self.ts_col
-        keys = self.key_cols
-        out_schema = (
-            _keys_prefix(self.df, keys)
-            + f"{ts_col} {_sql_type(self.df, ts_col)}, value double, "
-            + "cusum_hi double, cusum_lo double, alarm boolean"
+        return self._fold(
+            _make_cusum_step(target, h, slack, reset), _CUSUM_OUT, "hi double, lo double"
         )
-        kt, kk, kh = float(target), float(slack), float(h)
-
-        def handler(key, pdfs, state: GroupState):
-            hi, lo = state.get if state.exists else (0.0, 0.0)
-            outs = []
-            for pdf in _sorted_chunks(pdfs, ts_col):
-                for _, row in pdf.iterrows():
-                    x = float(row[value_col])
-                    nh = max(0.0, hi + (x - kt) - kk)
-                    nl = max(0.0, lo - (x - kt) - kk)
-                    a = nh > kh or nl > kh
-                    outs.append({
-                        **{k: row[k] for k in keys}, ts_col: row[ts_col],
-                        "value": x, "cusum_hi": _round6(nh),
-                        "cusum_lo": _round6(nl), "alarm": a,
-                    })
-                    hi, lo = (0.0, 0.0) if (a and reset) else (nh, nl)
-            state.update((hi, lo))
-            if outs:
-                yield pd.DataFrame(outs)
-
-        return self._stateful(self.df, handler, out_schema, "hi double, lo double")
 
     def holt(self, alpha: float = 0.5, beta: float = 0.3) -> DataFrame:
         """Streaming Holt smoothing twin (state.py:holt): the coupled
@@ -2247,80 +2103,13 @@ class StreamFrame:
         tick-for-tick equal to the batch kernel over the same rows
         (parity-tested). First row per key seeds level=x, trend=0.
         """
-        value_col = self.value_cols[0]
-        ts_col = self.ts_col
-        keys = self.key_cols
-        out_schema = (
-            _keys_prefix(self.df, keys)
-            + f"{ts_col} {_sql_type(self.df, ts_col)}, value double, "
-            + "level double, trend double, forecast double"
-        )
-        a, b = float(alpha), float(beta)
-        one_a, one_b = 1.0 - a, 1.0 - b
-
-        def handler(key, pdfs, state: GroupState):
-            lvl, tr = state.get if state.exists else (None, None)
-            outs = []
-            for pdf in _sorted_chunks(pdfs, ts_col):
-                for _, row in pdf.iterrows():
-                    x = float(row[value_col])
-                    if lvl is None:
-                        nl, nt = x, 0.0
-                    else:
-                        nl = a * x + one_a * (lvl + tr)
-                        nt = b * (nl - lvl) + one_b * tr
-                    outs.append({
-                        **{k: row[k] for k in keys}, ts_col: row[ts_col],
-                        "value": x, "level": _round6(nl),
-                        "trend": _round6(nt),
-                        "forecast": _round6(nl + nt),
-                    })
-                    lvl, tr = nl, nt
-            if lvl is not None:
-                state.update((lvl, tr))
-            if outs:
-                yield pd.DataFrame(outs)
-
-        return self._stateful(self.df, handler, out_schema, "l double, t double")
+        return self._fold(_make_holt_step(alpha, beta), _HOLT_OUT, "l double, t double")
 
     def kalman1d(self, q: float = 0.01, r: float = 1.0, p0: float = 1.0) -> DataFrame:
         """Streaming 1-D Kalman twin (state.py:kalman1d): (x, p) carried
         in the state store per key — tick-for-tick equal to the batch
         kernel (parity-tested). First row per key seeds x=z, p=p0."""
-        value_col = self.value_cols[0]
-        ts_col = self.ts_col
-        keys = self.key_cols
-        out_schema = (
-            _keys_prefix(self.df, keys)
-            + f"{ts_col} {_sql_type(self.df, ts_col)}, value double, "
-            + "kf_x double, kf_p double, kf_gain double"
-        )
-        kq, kr, kp0 = float(q), float(r), float(p0)
-
-        def handler(key, pdfs, state: GroupState):
-            x, p = state.get if state.exists else (None, None)
-            outs = []
-            for pdf in _sorted_chunks(pdfs, ts_col):
-                for _, row in pdf.iterrows():
-                    z = float(row[value_col])
-                    if x is None:
-                        x, p, k = z, kp0, 0.0
-                    else:
-                        pm = p + kq
-                        k = pm / (pm + kr)
-                        x = x + k * (z - x)
-                        p = (1.0 - k) * pm
-                    outs.append({
-                        **{kk: row[kk] for kk in keys}, ts_col: row[ts_col],
-                        "value": z, "kf_x": _round6(x), "kf_p": _round6(p),
-                        "kf_gain": _round6(k),
-                    })
-            if x is not None:
-                state.update((x, p))
-            if outs:
-                yield pd.DataFrame(outs)
-
-        return self._stateful(self.df, handler, out_schema, "x double, p double")
+        return self._fold(_make_kalman_step(q, r, p0), _KALMAN_OUT, "x double, p double")
 
     def anomaly(self, seconds: float, z: float = 3.0,
                 min_periods: int = 2) -> DataFrame:

@@ -869,13 +869,14 @@ def test_bench_covers_registry():
 
 
 def test_registry_front50_rotation():
-    """Pin the round-12 front-50 composition the registry comment claims
-    (the driver samples only the first 50 queries() entries; ADVICE r6
+    """Pin the front-50 composition the registry comment claims (the
+    driver samples only the first 50 queries() entries; ADVICE r6
     flagged a comment that drifted from the counted positions): the
     r11-rewritten-but-unsampled paths lead (r11 VERDICT item 5), then
-    every path whose code changed in r12, then the remaining streaming
-    contracts (whose start path changed). Every registered query must
-    also carry an oracle_sql twin."""
+    every path whose code changed in r12, then streaming contracts
+    (whose start path changed), then the batch kernels that fold the
+    step functions shared with their stream twins. Every registered
+    query must also carry an oracle_sql twin."""
     import __spark_entry__ as e
 
     names = list(e.queries())
@@ -901,7 +902,9 @@ def test_registry_front50_rotation():
         "running_sum_scaled",
     }
     # block (3): the streaming contracts whose _sized_start path changed
-    assert all(n.endswith("_stream") for n in names[37:50])
+    assert all(n.endswith("_stream") for n in names[37:46])
+    # block (4): the batch kernels that fold the shared step functions
+    assert names[46:50] == ["cusum", "holt", "kalman", "throttle"]
     assert len(set(names)) == len(names) >= 284
     osql = e.oracle_sql()
     missing = [n for n in names if n not in osql]

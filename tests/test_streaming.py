@@ -879,125 +879,6 @@ def test_streaming_combinator_cuts(spark, tmp_path_factory):
         assert got == expect, f"{disc}: {got} != {expect}"
 
 
-def test_tws_gate_detects_missing_runtime(spark):
-    """The transformWithState gate must be FALSE here unless ALL three
-    runtime requirements hold: the API exists in pyspark 4.1 but its
-    protobuf state-protocol dependency is absent in this container (the
-    call crashes the TWS driver worker), and the gate must ALSO refuse
-    a session whose state store provider is not RocksDB (TWS rejects
-    the default HDFS-backed provider at query start even where protobuf
-    imports fine), so running_agg must stay on applyInPandasWithState
-    by default."""
-    from pyspark.sql.group import GroupedData
-
-    from eventkit_spark.streaming.stream import tws_available
-
-    assert hasattr(GroupedData, "transformWithStateInPandas")
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        has_proto = True
-    except ImportError:
-        has_proto = False
-    has_rocks = "RocksDB" in (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-        or ""
-    )
-    assert tws_available(spark) == (has_proto and has_rocks)
-    # provider check alone must veto: default-provider session -> False
-    if not has_rocks:
-        assert not tws_available(spark)
-
-
-_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-
-
-def test_running_agg_tws_parity(spark, stream_dir):
-    """transformWithStateInPandas twin of running_agg matches the
-    classic handler — runs only where the TWS runtime exists (RocksDB
-    provider set FIRST: it is part of the gate)."""
-    from eventkit_spark.streaming.stream import tws_available
-
-    old = spark.conf.get(_PROVIDER_KEY, None)
-    spark.conf.set(
-        _PROVIDER_KEY,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        if not tws_available(spark):
-            pytest.skip("transformWithStateInPandas runtime (protobuf) not available")
-        sf = _stream(spark, stream_dir)
-        classic = sf.run_available_now(
-            sink_df=sf.running_agg(ema_n=10, use_tws=False), name="ek_tws_a"
-        )
-        tws = sf.run_available_now(
-            sink_df=sf.running_agg(ema_n=10, use_tws=True), name="ek_tws_b"
-        )
-        a = {(r["user_id"], r["rcount"]): (r["rsum"], round(r["ema"], 9)) for r in classic.collect()}
-        b = {(r["user_id"], r["rcount"]): (r["rsum"], round(r["ema"], 9)) for r in tws.collect()}
-        assert a == b
-    finally:
-        if old is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        else:
-            spark.conf.set(_PROVIDER_KEY, old)
-
-
-def test_tws_processor_sorts_across_chunks():
-    """The TWS processor must order rows by event time across ALL Arrow
-    chunks of a key's micro-batch, not per chunk (the r7-ADVICE bug
-    class). Drives handleInputRows directly with a stub state handle
-    and two chunks whose event times interleave — runnable even while
-    the TWS runtime itself is protobuf-gated."""
-    import pandas as pd
-
-    from eventkit_spark.streaming.stream import _make_running_agg_processor
-
-    class _StubState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class _StubHandle:
-        def __init__(self):
-            self.state = _StubState()
-
-        def getValueState(self, name, schema):
-            return self.state
-
-    proc = _make_running_agg_processor(["k"], "ts", "v", ema_n=3)
-    handle = _StubHandle()
-    proc.init(handle)
-    # chunk 1 holds ts 0 and 2; chunk 2 holds ts 1 and 3 — a per-chunk
-    # sort would fold values in order 10,30,20,40 (rmax wrong at ts=2).
-    chunks = [
-        pd.DataFrame({"k": [1, 1], "ts": [0, 2], "v": [10.0, 30.0]}),
-        pd.DataFrame({"k": [1, 1], "ts": [1, 3], "v": [20.0, 40.0]}),
-    ]
-    outs = pd.concat(list(proc.handleInputRows((1,), iter(chunks), None)), ignore_index=True)
-    assert list(outs["ts"]) == [0, 1, 2, 3]
-    assert list(outs["rcount"]) == [1, 2, 3, 4]
-    assert list(outs["rsum"]) == [10.0, 30.0, 60.0, 100.0]
-    assert list(outs["rmax"]) == [10.0, 20.0, 30.0, 40.0]
-    # state committed once per micro-batch, after the full drain
-    assert handle.state.get() == (4, 100.0, 10.0, 40.0, outs["ema"].iloc[-1])
-    # a second micro-batch resumes from committed state
-    more = pd.concat(
-        list(proc.handleInputRows((1,), iter([pd.DataFrame({"k": [1], "ts": [4], "v": [0.0]})]), None)),
-        ignore_index=True,
-    )
-    assert list(more["rcount"]) == [5]
-    assert list(more["rmin"]) == [0.0]
-
-
 def test_streaming_store_dedup_and_probe(spark, tmp_path_factory):
     """The persisted-store lifecycle composes with Structured Streaming
     two ways: (a) ingest dedup — foreachBatch feeds each micro-batch
@@ -1788,6 +1669,11 @@ def test_streaming_cross_batch_state_parity(spark, stream_dir, tmp_path):
         # arithmetic over the carry buffer) — the partial-chunk buffer
         # must hand off across batches exactly
         "chunk": lambda sf: sf.chunk(5),
+        # the fold twins share their state.py step with the batch kernels
+        "cusum": lambda sf: sf.cusum(50.0, h=150.0, slack=15.0),
+        "holt": lambda sf: sf.holt(),
+        "kalman1d": lambda sf: sf.kalman1d(),
+        "throttle": lambda sf: sf.throttle(maximum=5, interval=3600.0),
     }
     # two-input kernels: zip / ziplatest / takeuntil / sample
     two_input = {
